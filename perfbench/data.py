@@ -42,6 +42,20 @@ MEMO_GEOID_PREFIX = "99"
 #: deleted patrons get ids from here up, disjoint from every active id
 DELETED_ID_BASE = 10_000_000_000
 
+# The patron backlog's traffic mix.  PATRONS and DUP_SHARE are measured on
+# the engine's sf0.1 testdata: its customer table has 15 000 rows, and 355
+# of its orders repeat a customer's order of the same day (355 / 14 999
+# customers with orders).  MEMO_SHARE is the warehouse memo's share of the
+# oracle-checked ``pipeline_updated_mode`` (even custkeys, one half).
+# NEW_SHARE and DELETED_SHARE have no source: they are assumptions.
+PATRONS = 15_000
+DUP_SHARE = 355 / 14_999
+MEMO_SHARE = 0.5
+NEW_SHARE = 0.4
+DELETED_SHARE = 0.1
+#: scale of the operator pack's tables (orders = 1 500 000 * PACK_SF)
+PACK_SF = 0.005
+
 _DAY0 = np.datetime64("1995-01-01")
 _DAYS = 2404  # 1995-01-01 .. 2001-08-01, the testdata order-date span
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
@@ -92,10 +106,11 @@ def _orders(rng, orderkeys: np.ndarray, custkeys: np.ndarray, days: np.ndarray) 
     )
 
 
-def write_pack_tables(out_dir: str, seed: int, sf: float) -> int:
-    """The ten testdata tables at scale ``sf`` (orders = 1 500 000·sf).
-    Returns the total row count written."""
+def write_pack_tables(out_dir: str, seed: int) -> int:
+    """The ten testdata tables at scale ``PACK_SF``.  Returns the total row
+    count written."""
     rng = np.random.default_rng(seed)
+    sf = PACK_SF
     n_cust, n_ord, n_part = int(150_000 * sf), int(1_500_000 * sf), int(200_000 * sf)
     n_supp, n_events, n_docs = max(10, int(10_000 * sf)), int(1_000_000 * sf), int(50_000 * sf)
     n_line, n_vecs = 4 * n_ord, n_docs
@@ -220,6 +235,10 @@ class Backlog:
             out.update({sha_hex(str(i)): mode for i in ids})
         return out
 
+    def memo_hits(self) -> set[str]:
+        """sha256(salt‖id) of the UPDATED patrons the memo must geocode."""
+        return {sha_hex(str(i)) for i in self.memo_ids}
+
     def summary(self) -> dict:
         n_upd = len(self.preexisting_ids)
         total = len(self.new_ids) + n_upd + len(self.deleted_ids)
@@ -253,29 +272,25 @@ def _warehouse_rows(ids, address_hashes) -> pd.DataFrame:
     )
 
 
-def write_patron_backlog(
-    out_dir: str,
-    seed: int,
-    *,
-    patrons: int,
-    new_share: float = 0.4,
-    dup_share: float = 0.05,
-    memo_share: float = 0.5,
-    deleted_share: float = 0.1,
-) -> Backlog:
+def write_patron_backlog(out_dir: str, seed: int) -> Backlog:
     """Write ``orders``/``customer`` for ``_sierra_from_orders`` (one order
-    per patron, whose date is the patron's timestamp, plus ``dup_share``
+    per patron, whose date is the patron's timestamp, plus ``DUP_SHARE``
     repeat orders on the same day that the keep-first dedup must collapse),
     the warehouse memo ``patron_info`` and the ``deleted`` feed.
 
-    The memo holds ``memo_share`` of the pre-existing patrons, keyed by the
+    The memo holds ``MEMO_SHARE`` of the pre-existing patrons, keyed by the
     address hash of the row keep-first keeps (lowest ``display_order``),
-    plus every deleted patron.  Deleted ids are disjoint from active ones."""
+    plus every deleted patron.  Deleted ids are disjoint from active ones.
+
+    sf0.1's orders give each customer about ten rows over the whole date
+    span; the backlog keeps one row per patron (plus the same-day repeats),
+    so a pass stays a few production pages long."""
     rng = np.random.default_rng(seed)
+    patrons = PATRONS
     keys = np.arange(patrons)
     days = rng.integers(0, _DAYS, patrons)
-    is_new = rng.random(patrons) < new_share
-    dups = rng.choice(patrons, int(patrons * dup_share), replace=False)
+    is_new = rng.random(patrons) < NEW_SHARE
+    dups = rng.choice(patrons, int(patrons * DUP_SHARE), replace=False)
     cust = np.concatenate([keys, dups])
     orders = _orders(rng, np.arange(len(cust)), cust, np.concatenate([days, days[dups]]))
     customers = _customers(rng, keys)
@@ -298,13 +313,13 @@ def write_patron_backlog(
     first = orders.sort_values("o_orderkey").drop_duplicates("o_custkey")
     first = first.merge(customers, left_on="o_custkey", right_on="c_custkey")
     pre = first[~is_new[first.o_custkey.to_numpy()]]
-    memo = pre[rng.random(len(pre)) < memo_share]
+    memo = pre[rng.random(len(pre)) < MEMO_SHARE]
     memo_keys = [
         f"{c}_{a}_{m}_NY_{k % 89999 + 10000:05d}-1234"
         for c, a, m, k in zip(memo.o_custkey, memo.c_name, memo.c_mktsegment, memo.o_orderkey)
     ]
 
-    n_del = int(patrons * deleted_share)
+    n_del = int(patrons * DELETED_SHARE)
     del_ids = np.arange(n_del, dtype="int64") + DELETED_ID_BASE
     del_days = rng.integers(0, _DAYS, n_del)
     deleted = pd.DataFrame(

@@ -84,10 +84,13 @@ def check_records(
     put_sizes: list[int],
     expected: dict[str, str],
     reported: dict[str, int],
+    memo: set[str],
 ) -> tuple[list[str], dict]:
     """Check a drain's decoded output.  ``expected`` maps each patron's
     sha256(salt‖id) to the mode that must emit it; ``reported`` is the
-    engine's own per-mode emitted count.  Returns (failures, measured)."""
+    engine's own per-mode emitted count; ``memo`` holds the UPDATED patrons
+    whose geoid must come from the warehouse memo.  Returns (failures,
+    measured)."""
     failures: list[str] = []
     counts = Counter(d["patron_id"] for d in decoded)
     missing = [k for k in expected if counts[k] == 0]
@@ -112,21 +115,25 @@ def check_records(
         failures.append(f"a put carried {max(put_sizes)} records (limit {KINESIS_MAX_BATCH})")
 
     updated = [d for d in decoded if expected.get(d["patron_id"]) == "updated"]
-    memo_hits = sum((d["geoid"] or "").startswith(MEMO_GEOID_PREFIX) for d in updated)
+    memo_hits = {d["patron_id"] for d in updated if (d["geoid"] or "").startswith(MEMO_GEOID_PREFIX)}
+    if memo_hits != memo:
+        failures.append(
+            f"memo: {len(memo - memo_hits)} expected hit(s) missed, {len(memo_hits - memo)} unexpected"
+        )
     return failures, {
         "per_mode": dict(got),
-        "memo_hit_share": memo_hits / len(updated) if updated else 0.0,
+        "memo_hit_share": len(memo_hits) / len(updated) if updated else 0.0,
     }
 
 
-def self_test(decoded, put_sizes, expected, reported) -> list[str]:
+def self_test(decoded, put_sizes, expected, reported, memo) -> list[str]:
     """The check must fail when one record is dropped or duplicated; returns
     a failure for each mutation it did not catch."""
     if not decoded:
         return ["self-test: no records to mutate"]
     out = []
     for what, mutated in (("dropped", decoded[1:]), ("duplicated", decoded + decoded[:1])):
-        failures, _ = check_records(mutated, put_sizes, expected, reported)
+        failures, _ = check_records(mutated, put_sizes, expected, reported, memo)
         if not failures:
             out.append(f"self-test: a {what} record passed the output check")
     return out

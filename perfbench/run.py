@@ -6,7 +6,8 @@ Run from the root of a checkout.  One process drives Spark at
 ``local[<cpus available>]`` with no extra client threads.  The run:
 
 1. sets up ``SETUP_REPS`` times (Spark session start plus seeded input
-   generation) and keeps the last set-up; ``setup_s`` is the median;
+   generation) and keeps the last set-up; ``setup_s`` is the median (a
+   traced run, which does not report it, sets up once);
 2. warms up, untimed: one full pass (the operator pack first checks every
    query against its DuckDB twin);
 3. runs closed-loop passes over the whole input until ``--seconds`` have
@@ -29,14 +30,13 @@ import gc
 import json
 import os
 import platform
-import resource
 import shutil
 import statistics
 import subprocess
 import sys
 import time
 
-SETUP_REPS = 5
+SETUP_REPS = 3
 END_TO_END = {
     "setup_s": "s",
     "wall_s": "s",
@@ -62,14 +62,28 @@ def tail(samples: list[float]) -> tuple[float, float]:
     return s[k - 1], 100.0 * k / len(s)
 
 
+def process_tree(spark) -> list[int]:
+    """This process, the JVM and every process the JVM started (Python
+    daemon and workers)."""
+    jvm = spark._jvm.java.lang.ProcessHandle.current()
+    return [os.getpid(), jvm.pid()] + [h.pid() for h in jvm.descendants().toArray()]
+
+
+def reset_peak_rss(spark) -> None:
+    """Restart every process's peak-RSS counter (VmHWM) at its current RSS,
+    so the peak covers the timed passes, not set-up or warm-up."""
+    for pid in process_tree(spark):
+        try:
+            with open(f"/proc/{pid}/clear_refs", "w", encoding="ascii") as f:
+                f.write("5")
+        except OSError:
+            continue  # a worker that exited between listing and writing
+
+
 def peak_rss_mb(spark) -> float:
-    """Peak resident set of the driver Python, the JVM and every process the
-    JVM started (Python daemon and workers), summed."""
-    pids = [spark._jvm.java.lang.ProcessHandle.current().pid()]
-    for h in spark._jvm.java.lang.ProcessHandle.current().descendants().toArray():
-        pids.append(h.pid())
-    kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-    for pid in pids:
+    """Peak resident set of the process tree, summed."""
+    kb = 0
+    for pid in process_tree(spark):
         try:
             with open(f"/proc/{pid}/status", encoding="ascii") as f:
                 kb += next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
@@ -86,13 +100,10 @@ def cpu_ticks() -> list[int]:
 
 
 def tree_cpu_s(spark) -> float:
-    """CPU seconds (user + system) used so far by this process, the JVM and
-    the JVM's descendants (Python daemon and workers)."""
-    pids = [os.getpid(), spark._jvm.java.lang.ProcessHandle.current().pid()]
-    pids += [h.pid() for h in spark._jvm.java.lang.ProcessHandle.current().descendants().toArray()]
+    """CPU seconds (user + system) used so far by the process tree."""
     tick = os.sysconf("SC_CLK_TCK")
     total = 0
-    for pid in pids:
+    for pid in process_tree(spark):
         try:
             with open(f"/proc/{pid}/stat", encoding="ascii") as f:
                 fields = f.read().rsplit(")", 1)[1].split()
@@ -116,6 +127,7 @@ def host_info(spark, root: str) -> dict:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "driver_memory": spark.conf.get("spark.driver.memory", "1g"),
         "pyspark": pyspark.__version__,
         "python": platform.python_version(),
         "commit": commit,
@@ -162,7 +174,7 @@ def run(args, root: str, work: str) -> dict:
     from perfbench.workloads import WORKLOADS
 
     setup_s, spark, wl = [], None, None
-    for _ in range(SETUP_REPS):
+    for _ in range(1 if args.trace else SETUP_REPS):
         t0 = time.perf_counter()
         if spark is not None:
             spark.stop()
@@ -172,7 +184,7 @@ def run(args, root: str, work: str) -> dict:
         wl.setup()
         setup_s.append(time.perf_counter() - t0)
 
-    log(f"set-up x{SETUP_REPS}: " + " ".join(f"{t:.2f}" for t in setup_s) + " s")
+    log(f"set-up x{len(setup_s)}: " + " ".join(f"{t:.2f}" for t in setup_s) + " s")
     info = {"workload": args.workload, "seed": args.seed, "host": host_info(spark, root),
             "inputs": wl.summary()}
     t0 = time.perf_counter()
@@ -185,12 +197,16 @@ def run(args, root: str, work: str) -> dict:
         # warm-up or the previous pass left behind
         gc.collect()
         spark._jvm.java.lang.System.gc()
+        if not passes:
+            reset_peak_rss(spark)
         c0, k0 = tree_cpu_s(spark), cpu_ticks()
         passes.append(wl.run_pass())
         c1, k1 = tree_cpu_s(spark), cpu_ticks()
         d = [b - a for a, b in zip(k0, k1)]
         log(f"pass {len(passes)}: {passes[-1].wall_s:.2f} s, {len(passes[-1].batch_s)} batches, "
             f"cpu {c1 - c0:.2f} s, host steal {d[7] / sum(d):.3f} idle {d[3] / sum(d):.3f}")
+    rss_mb = peak_rss_mb(spark)
+    log(f"peak rss over the timed passes: {rss_mb:.0f} MB")
     if args.trace:
         from perfbench.spans import Tracer
 
@@ -227,7 +243,7 @@ def run(args, root: str, work: str) -> dict:
             "rows_per_s": statistics.median(p.rows / p.wall_s for p in passes),
             "batch_p50_s": statistics.median(batch_s),
             "batch_tail_s": tail_s,
-            "peak_rss_mb": peak_rss_mb(spark),
+            "peak_rss_mb": rss_mb,
         }
         metrics = {k: {"value": values[k], "unit": u} for k, u in END_TO_END.items()}
     print(json.dumps(info, default=str), flush=True)
@@ -280,7 +296,6 @@ def main() -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     try:
         result = run(args, root, work)
     finally:

@@ -97,15 +97,29 @@ def _sink_layers(tracer, puts) -> dict:
 
 
 def _growth(batch_s: list[float]) -> float:
-    """Mean of the last quartile of batches ÷ mean of the first."""
+    """Mean of the last quartile of batches ÷ mean of the first, over one
+    mode's full pages (its last batch is the partial one that ends it)."""
+    batch_s = batch_s[:-1]
+    if not batch_s:
+        return 0.0
     q = max(1, len(batch_s) // 4)
     return statistics.fmean(batch_s[-q:]) / statistics.fmean(batch_s[:q])
 
 
-def _check(puts, expected, reported) -> tuple[list[str], dict]:
+def _check(puts, expected, reported, memo) -> tuple[list[str], dict]:
     decoded, failures = decode_all(puts.records)
-    more, measured = check_records(decoded, puts.sizes, expected, reported)
-    return failures + more + self_test(decoded, puts.sizes, expected, reported), measured
+    more, measured = check_records(decoded, puts.sizes, expected, reported, memo)
+    return failures + more + self_test(decoded, puts.sizes, expected, reported, memo), measured
+
+
+#: NEW rows go to the streaming drain as this many ordered parquet files
+STREAM_FILES = 3
+#: page of the traced small-page drain: NEW (about 6 100 rows) runs 3
+#: batches and UPDATED (every active row, about 15 400) 7, 6 of them full.
+#: Each batch costs about 3 s of fixed work on a 4-core host, so a page that
+#: gives NEW and UPDATED eight batches each (750: 31 batches, 118 s) does
+#: not fit in a run
+TRACE_PAGE = 2_500
 
 
 class PollDrain:
@@ -115,14 +129,13 @@ class PollDrain:
 
     The traced pass also drains the same backlog three more ways, so one
     trace shows where per-batch time goes: with one batch per mode (the
-    backfill shape, per-batch overhead near zero), at half the page size,
-    and, for the NEW rows, through Structured Streaming
-    (``run_available_now`` + ``stream_dedup`` + ``new_patrons_graph``, one
-    parquet file per trigger)."""
+    backfill shape, per-batch overhead near zero), at the small
+    ``TRACE_PAGE`` (many batches per mode), and, for the NEW rows, through
+    Structured Streaming (``run_available_now`` + ``stream_dedup`` +
+    ``new_patrons_graph``, one parquet file per trigger)."""
 
-    def __init__(self, spark, seed, work, *, patrons, stream_files):
+    def __init__(self, spark, seed, work):
         self.spark, self.seed, self.work = spark, seed, work
-        self.patrons, self.stream_files = patrons, stream_files
         self.cfg = PipelineConfig(salt=data.SALT)
 
     def setup(self) -> None:
@@ -133,8 +146,9 @@ class PollDrain:
         from queries.pipeline_modes import _sierra_from_orders
 
         spark, d = self.spark, fresh_dir(os.path.join(self.work, "input"))
-        self.backlog = data.write_patron_backlog(d, self.seed, patrons=self.patrons)
+        self.backlog = data.write_patron_backlog(d, self.seed)
         self.expected = self.backlog.expected_mode_of()
+        self.memo = self.backlog.memo_hits()
         sierra = _sierra_from_orders(spark, d)
         roles = spark.createDataFrame(self.backlog.roles)
         active_path = os.path.join(d, "active")
@@ -181,7 +195,7 @@ class PollDrain:
             wall = time.perf_counter() - t0
         modes = {"new": report.new, "updated": report.updated, "deleted": report.deleted}
         puts = read_puts(transport.out_dir)
-        failures, measured = _check(puts, self.expected, {m: s.rows_out for m, s in modes.items()})
+        failures, measured = _check(puts, self.expected, {m: s.rows_out for m, s in modes.items()}, self.memo)
         failures += [f"{m}: read 0 rows" for m, s in modes.items() if s.rows_in == 0]
         marks = [t0] + store.commits
         batch_s = [b - a for a, b in zip(marks, marks[1:])]
@@ -196,7 +210,10 @@ class PollDrain:
                     "pipeline.batches": len(batch_s),
                     "pipeline.graph_build_s": tracer.total("pipeline.graph_build"),
                     "pipeline.runner_self_s": tracer.self_times().get("pipeline.drain", 0.0),
-                    "pipeline.batch_growth_ratio": _growth(batch_s),
+                    # within UPDATED, the mode that reads every active row
+                    "pipeline.batch_growth_ratio": _growth(
+                        batch_s[report.new.batches : report.new.batches + report.updated.batches]
+                    ),
                     "dedup.accumulate_keys_s": tracer.total("dedup.accumulate_keys"),
                     "dedup.seen_plan_nodes": spans.plan_nodes(inst["df"]),
                     "dedup.drop_share": 1 - rows_out / res.rows,
@@ -221,17 +238,23 @@ class PollDrain:
         res.layers["pipeline.spark_jobs_per_batch"] = res.layers["spark.jobs"] / len(res.batch_s)
 
         # The same rows as one batch per mode (the backfill shape) and at
-        # half the page size.  Wall time against batch count at fixed rows
+        # the small TRACE_PAGE.  Wall time against batch count at fixed rows
         # gives the per-batch fixed cost; its share of the production drain
-        # is the part a per-batch fix can remove.
-        one, half = (
-            self._drain(PipelineConfig(salt=data.SALT, batch_size=size), None, os.path.join(self.work, name))
-            for name, size in (("one_batch", 10 * res.rows), ("half_batch", self.cfg.batch_size // 2))
-        )
-        for extra in (one, half):
+        # is the part a per-batch fix can remove.  The small-page drain has
+        # a tracer of its own, so its spans stay out of the production totals.
+        one = self._drain(PipelineConfig(salt=data.SALT, batch_size=10 * res.rows), None,
+                          os.path.join(self.work, "one_batch"))
+        small = self._drain(PipelineConfig(salt=data.SALT, batch_size=TRACE_PAGE),
+                            spans.Tracer(f"{tracer.run_id}-small"), os.path.join(self.work, "small_page"))
+        for extra in (one, small):
             res.failures += extra.failures
             res.attempted += extra.attempted
-        per_batch = (half.wall_s - one.wall_s) / (len(half.batch_s) - len(one.batch_s))
+        # key-set size and in-mode growth need many folds: the production
+        # drain has four batches, the small-page drain about eleven
+        for k in ("pipeline.batch_growth_ratio", "dedup.seen_plan_nodes"):
+            res.layers[k] = small.layers[k]
+        res.layers["pipeline.small_page_batches"] = len(small.batch_s)
+        per_batch = (small.wall_s - one.wall_s) / (len(small.batch_s) - len(one.batch_s))
         res.layers["pipeline.one_batch_wall_s"] = one.wall_s
         res.layers["pipeline.batch_fixed_s"] = per_batch
         res.layers["pipeline.fixed_share"] = len(res.batch_s) * per_batch / self.untraced_wall
@@ -251,7 +274,7 @@ class PollDrain:
             .toArrow()
         )
         src = fresh_dir(os.path.join(self.work, "stream", "src"))
-        _write_split(new, src, self.stream_files)
+        _write_split(new, src, STREAM_FILES)
         transport = FilePutTransport(fresh_dir(os.path.join(self.work, "stream", "puts")))
         engine_sink = make_avro_kinesis_sink(transport)
         emitted = []
@@ -271,9 +294,9 @@ class PollDrain:
         prog = spans.stream_progress(query)
         puts = read_puts(transport.out_dir)
         expected = {data.sha_hex(str(i)): "new" for i in self.backlog.new_ids}
-        failures, _ = _check(puts, expected, {"new": sum(emitted)})
-        if prog["triggers"] != self.stream_files:
-            failures.append(f"{prog['triggers']} triggers for {self.stream_files} files")
+        failures, _ = _check(puts, expected, {"new": sum(emitted)}, set())
+        if prog["triggers"] != STREAM_FILES:
+            failures.append(f"{prog['triggers']} triggers for {STREAM_FILES} files")
         layers = {k: v for k, v in prog.items() if k.startswith("stream.")}
         layers["stream.triggers"] = prog["triggers"]
         layers["stream.rows"] = sum(prog["rows"])
@@ -311,19 +334,19 @@ class OperatorPack:
     execution timed apart.  The untimed warm-up pass collects every query
     and compares it with its DuckDB twin."""
 
-    def __init__(self, spark, seed, work, *, sf):
-        self.spark, self.seed, self.sf = spark, seed, sf
+    def __init__(self, spark, seed, work):
+        self.spark, self.seed = spark, seed
         self.dir = fresh_dir(os.path.join(work, "tables"))
 
     def setup(self) -> None:
         from bench import HEADLINE
         from queries import SPARK_QUERIES
 
-        self.rows = data.write_pack_tables(self.dir, self.seed, self.sf)
+        self.rows = data.write_pack_tables(self.dir, self.seed)
         self.queries = {name: SPARK_QUERIES[name] for name in HEADLINE}
 
     def summary(self) -> dict:
-        return {"table_rows": self.rows, "queries": len(self.queries), "sf": self.sf}
+        return {"table_rows": self.rows, "queries": len(self.queries), "sf": data.PACK_SF}
 
     def warm(self) -> tuple[int, list[str]]:
         """Collect every query once and compare it with its DuckDB twin,
@@ -383,9 +406,6 @@ class OperatorPack:
         return res
 
 
-#: Sizes keep one run of each workload near 50 s on a 4-core host: the
+#: Sizes keep one run of each workload near 55 s on a 4-core host: the
 #: poll drain is four production batches (NEW 1, UPDATED 2, DELETED 1).
-WORKLOADS = {
-    "poll_drain": lambda spark, seed, work: PollDrain(spark, seed, work, patrons=15_000, stream_files=3),
-    "operator_pack": lambda spark, seed, work: OperatorPack(spark, seed, work, sf=0.005),
-}
+WORKLOADS = {"poll_drain": PollDrain, "operator_pack": OperatorPack}
