@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import os
 import time
 from collections import defaultdict
 
@@ -116,15 +117,47 @@ def plan_nodes(df) -> int:
     return len(df._jdf.queryExecution().analyzed().treeString().strip().splitlines())
 
 
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    process under it: the Spark JVM, the Python daemon and its workers.
+    Each live process adds its own time and that of the children it has
+    reaped, so a worker that exits stays counted in its parent.  Time spent
+    waiting for a core is not CPU time, so other tenants of the host move
+    this clock far less than the wall clock; slower cores (a busy sibling
+    thread, cold caches) still move it."""
+    stats, children = {}, {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat", "rb") as f:
+                fields = f.read().rsplit(b")", 1)[1].split()
+        except OSError:
+            continue  # exited between listing and reading
+        stats[int(d)] = fields
+        children.setdefault(int(fields[1]), []).append(int(d))
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        todo += children.get(pid, [])
+        if pid in stats:
+            total += sum(int(x) for x in stats[pid][11:15])  # utime stime cutime cstime
+    return total / _TICK
+
+
 class TimedStateStore:
     """Delegating watermark store that timestamps every get/set.  Commit
-    timestamps are the batch boundaries of the closed loop (the runner
-    commits once per batch), so they are kept in untraced runs too."""
+    wall and CPU clocks are the batch boundaries of the closed loop (the
+    runner commits once per batch), so they are kept in untraced runs too."""
 
     def __init__(self, inner, tracer: Tracer | None = None):
         self.inner = inner
         self.tracer = tracer
         self.commits: list[float] = []
+        self.commit_cpu: list[float] = []
 
     def get(self) -> dict:
         with self.tracer.span("state.get") if self.tracer else contextlib.nullcontext():
@@ -134,6 +167,7 @@ class TimedStateStore:
         with self.tracer.span("state.set") if self.tracer else contextlib.nullcontext():
             self.inner.set(state)
         self.commits.append(time.perf_counter())
+        self.commit_cpu.append(tree_cpu_s())
 
 
 # -- transport counters (executor side, via accumulators) ---------------------
@@ -179,8 +213,11 @@ def counted_geosupport(inner, acc):
 
 def spark_snapshot(spark) -> dict:
     """Cumulative stage/task/shuffle/spill totals from the application status
-    store, job and SQL-execution counts, keyed for :func:`spark_delta`."""
+    store, job and SQL-execution counts, generated classes compiled, and the
+    JVM's JIT-compilation and GC times, keyed for :func:`spark_delta`."""
     sc = spark.sparkContext
+    jvm = sc._jvm
+    mx = jvm.java.lang.management.ManagementFactory
     store = sc._jsc.sc().statusStore()
     gw = sc._gateway
     stages = store.stageList(None, False, False, gw.new_array(gw.jvm.double, 0), None)
@@ -196,6 +233,10 @@ def spark_snapshot(spark) -> dict:
         snap["spill"] += s.memoryBytesSpilled() + s.diskBytesSpilled()
     snap["jobs"] = store.jobsList(None).size()
     snap["sql_executions"] = spark._jsparkSession.sharedState().statusStore().executionsCount()
+    snap["codegen_compiles"] = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    snap["jit_ms"] = mx.getCompilationMXBean().getTotalCompilationTime()
+    gcs = mx.getGarbageCollectorMXBeans()
+    snap["gc_ms"] = sum(gcs.get(i).getCollectionTime() for i in range(gcs.size()))
     return snap
 
 
@@ -208,6 +249,9 @@ def spark_delta(before: dict, after: dict) -> dict:
         "spark.spill_bytes": after["spill"] - before["spill"],
         "spark.jobs": after["jobs"] - before["jobs"],
         "spark.sql_executions": after["sql_executions"] - before["sql_executions"],
+        "codegen.compiles": after["codegen_compiles"] - before["codegen_compiles"],
+        "jvm.jit_s": (after["jit_ms"] - before["jit_ms"]) / 1000,
+        "jvm.gc_s": (after["gc_ms"] - before["gc_ms"]) / 1000,
     }
 
 

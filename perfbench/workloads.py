@@ -4,8 +4,10 @@ runs the same code paths once, untimed, so JIT, codegen and Python workers
 are hot, and every ``run_pass()`` drains the whole input in a closed loop:
 the runner starts the next batch only after the previous commit.
 
-A pass returns its wall time, the source rows it drained, its per-batch
-times, the output-check failures and, when traced, the per-layer figures.
+A pass returns its wall and CPU time, the source rows it drained, its
+per-batch wall and CPU times, the output-check failures and, when traced,
+the per-layer figures.  CPU time is :func:`perfbench.spans.tree_cpu_s`: the
+whole process tree's, read at the same boundaries as the wall clock.
 """
 
 from __future__ import annotations
@@ -33,8 +35,10 @@ from perfbench.outputs import FilePutTransport, check_records, decode_all, read_
 @dataclass
 class PassResult:
     wall_s: float
+    cpu_s: float
     rows: int
     batch_s: list[float]
+    batch_cpu_s: list[float]
     attempted: int
     failures: list[str]
     layers: dict = field(default_factory=dict)
@@ -134,6 +138,10 @@ class PollDrain:
     Structured Streaming (``run_available_now`` + ``stream_dedup`` +
     ``new_patrons_graph``, one parquet file per trigger)."""
 
+    #: a pass is four batches of about 3 s each; a second timed pass would
+    #: take a run past a minute
+    min_passes = 1
+
     def __init__(self, spark, seed, work):
         self.spark, self.seed, self.work = spark, seed, work
         self.cfg = PipelineConfig(salt=data.SALT)
@@ -185,23 +193,24 @@ class PollDrain:
         if tracer is not None:
             sink = tracer.wrap("sink.call", sink)
         with spans.instrument(tracer) if tracer else contextlib.nullcontext() as inst:
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), spans.tree_cpu_s()
             with tracer.span("pipeline.drain") if tracer else contextlib.nullcontext():
                 report = run_all_modes(
                     self.spark, cfg, store,
                     active_source=self.active, deleted_source=self.deleted, patron_info=self.patron_info,
                     sink=sink, census=census, geosupport=geo, now=data.RUN_NOW,
                 )
-            wall = time.perf_counter() - t0
+            wall, cpu = time.perf_counter() - t0, spans.tree_cpu_s() - c0
         modes = {"new": report.new, "updated": report.updated, "deleted": report.deleted}
         puts = read_puts(transport.out_dir)
         failures, measured = _check(puts, self.expected, {m: s.rows_out for m, s in modes.items()}, self.memo)
         failures += [f"{m}: read 0 rows" for m, s in modes.items() if s.rows_in == 0]
-        marks = [t0] + store.commits
+        marks, cpu_marks = [t0] + store.commits, [c0] + store.commit_cpu
         batch_s = [b - a for a, b in zip(marks, marks[1:])]
+        batch_cpu_s = [b - a for a, b in zip(cpu_marks, cpu_marks[1:])]
         res = PassResult(
-            wall, sum(s.rows_in for s in modes.values()), batch_s, len(batch_s) + 1, failures,
-            measured=measured,
+            wall, cpu, sum(s.rows_in for s in modes.values()), batch_s, batch_cpu_s,
+            len(batch_s) + 1, failures, measured=measured,
         )
         if tracer is not None:
             rows_out = sum(s.rows_out for s in modes.values())
@@ -329,10 +338,15 @@ def _write_split(table, out_dir: str, parts: int) -> None:
 
 
 class OperatorPack:
-    """The frozen ``bench.HEADLINE`` queries through the noop sink, with
-    driver-side build, Catalyst planning (forced ``executedPlan``) and
-    execution timed apart.  The untimed warm-up pass collects every query
-    and compares it with its DuckDB twin."""
+    """The frozen ``bench.HEADLINE`` queries, each collected to the driver
+    (``toPandas``, Arrow-backed) with driver-side build, Catalyst planning
+    (forced ``executedPlan``) and execution timed apart.  After its timer
+    stops, every result of every pass is compared with its DuckDB twin."""
+
+    #: each query is timed in at least this many passes and its cost is the
+    #: least it took: every pass compiles a few hundred new classes, and a
+    #: stretch of one warm pass can run a fifth slower than in the next
+    min_passes = 2
 
     def __init__(self, spark, seed, work):
         self.spark, self.seed = spark, seed
@@ -349,51 +363,45 @@ class OperatorPack:
         return {"table_rows": self.rows, "queries": len(self.queries), "sf": data.PACK_SF}
 
     def warm(self) -> tuple[int, list[str]]:
-        """Collect every query once and compare it with its DuckDB twin,
-        then run one untimed pass: the collect path leaves the noop-write
-        path's JIT cold."""
-        checked, failures = self._oracle_check()
-        self.run_pass()
-        return checked, failures
-
-    def _oracle_check(self) -> tuple[int, list[str]]:
+        """Run every DuckDB twin once, then one checked pass."""
         from queries import ORACLE_SQL
-        from tools.check_oracle import compare, duck_con
+        from tools.check_oracle import duck_con
 
         con = duck_con(self.dir)
-        failures = []
         try:
-            for name, fn in self.queries.items():
-                got = fn(self.spark, self.dir).toPandas()
-                self.spark.catalog.clearCache()
-                if name not in ORACLE_SQL:
-                    continue
-                ok, msg = compare(name, got, con.execute(ORACLE_SQL[name]).df())
-                if not ok:
-                    failures.append(f"{name}: {msg}")
+            self.expected = {n: con.execute(ORACLE_SQL[n]).df() for n in self.queries if n in ORACLE_SQL}
         finally:
             con.close()
-        return len(self.queries), failures
+        res = self.run_pass()
+        return res.attempted, res.failures
 
     def run_pass(self, tracer=None) -> PassResult:
         """Every query once; each query execution is a batch."""
+        from tools.check_oracle import compare
+
         snap = spans.spark_snapshot(self.spark) if tracer else None
         span = tracer.span if tracer else (lambda name: contextlib.nullcontext())
-        batch_s, failures = [], []
-        t_pass = time.perf_counter()
+        batch_s, batch_cpu_s, failures = [], [], []
         for name, fn in self.queries.items():
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), spans.tree_cpu_s()
             with span(f"pack.{name}"):
                 with span(f"pack.{name}.build"):
                     df = fn(self.spark, self.dir)
                 with span(f"pack.{name}.plan"):
                     df._jdf.queryExecution().executedPlan()
                 with span(f"pack.{name}.exec"):
-                    df.write.format("noop").mode("overwrite").save()
+                    got = df.toPandas()
             batch_s.append(time.perf_counter() - t0)
+            batch_cpu_s.append(spans.tree_cpu_s() - c0)
             self.spark.catalog.clearCache()
-        wall = time.perf_counter() - t_pass
-        res = PassResult(wall, self.rows, batch_s, len(batch_s), failures)
+            if name in self.expected:
+                ok, msg = compare(name, got, self.expected[name])
+                if not ok:
+                    failures.append(f"{name}: {msg}")
+        # the pass is its queries: the result checks run outside their clocks
+        res = PassResult(
+            sum(batch_s), sum(batch_cpu_s), self.rows, batch_s, batch_cpu_s, len(batch_s), failures
+        )
         if tracer is None:
             return res
         for name in self.queries:
